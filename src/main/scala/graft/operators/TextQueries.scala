@@ -1757,6 +1757,10 @@ object TextQueries extends QueryPack {
           while (i < sts.length) { out.add(Row(ids(i), sts(i))): Unit; i += 1 }
           spark.createDataFrame(out, outSchema)
         }
+      // the driver-built state is not backed by a kept RDD, so the
+      // previous distributed training's kept state is now unreachable —
+      // retire it (the same one-per-session bound as the RDD path)
+      if (needState) Option(keptBpeState.remove(spark)).foreach(_.unpersist(blocking = false))
       return (merges.result(), stateDf)
     }
     val statePart = math.max(1L,

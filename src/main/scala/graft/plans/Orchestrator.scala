@@ -5,6 +5,7 @@ import graft.sources.{Tables, Warehouse}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.concurrent.{ExecutionContext, Future}
 
 /** Full ETL pipeline — the reference's master procedure re-expressed as
   * one Spark driver program (reference: sql/utils/run_full_etl_process
@@ -23,153 +24,138 @@ import org.apache.spark.sql.types._
   * month-partitioned write (partition pruning for downstream readers).
   */
 class Orchestrator(spark: SparkSession, sfDir: String, whRoot: String) {
+  import Orchestrator.Node
 
   val wh = new Warehouse(whRoot, spark)
   val log = new EtlLog(wh, spark)
   private val dec = DecimalType(18, 2)
+  private implicit val ec: ExecutionContext = Orchestrator.loaderPool
 
-  /** Runs all three stages; returns per-table row counts. `probe`
-    * receives (stage, seconds) per stage — the bench ledger's
-    * sub-timing hook (q60 publishes staging/3nf/dm through
-    * [[graft.BenchProbes]] so a blown-up ETL row names a stage); the
-    * default is a no-op for every other caller.
-    *
-    * The 15 loaders run as a dependency DAG (guide §2.6: actions are
-    * only sequential because driver code calls them sequentially):
-    * each loader starts the moment the tables it READS are written,
-    * not at its stage's barrier — 3NF dims start once the three dim
-    * staging tables land (concurrent with the big sales/orders staging
-    * loads), the 3NF fact waits on sales/orders staging + the dim
-    * group, DM dims need only the 3NF dims (concurrent with the 3NF
-    * fact), and dim_dates/fct_sales wait on ce_sales alone. The
-    * parent-first dependency ORDER is exactly the reference's — only
-    * the false barriers between independent loaders are gone. Phase
-    * spans (first loader start → last loader end) now OVERLAP, so
-    * their sum can exceed the pipeline wall; each span still names
-    * the stage a blow-up lives in.
+  /** Runs every node of the loader DAG ([[nodes]]); returns per-table
+    * row counts. `probe` receives (layer, seconds) per layer — the
+    * bench ledger's sub-timing hook (q60 publishes staging/3nf/dm
+    * through [[graft.BenchProbes]] so a blown-up ETL row names a
+    * layer); the default is a no-op for every other caller. Each span
+    * runs from the layer's first node start to its last node end; the
+    * spans OVERLAP (3NF dims run beside the sales/orders staging, DM
+    * dims beside the 3NF fact), so their sum can exceed the pipeline
+    * wall. The log is flushed on every exit, failure included.
     */
   def runFullEtl(probe: (String, Double) => Unit = (_, _) => ()): Map[String, Long] = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext = Orchestrator.loaderPool
     val t0 = System.nanoTime()
-    val phaseStart = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]
-    val phaseEnd = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]
-    def mark[T](phase: String)(body: => T): T = {
-      phaseStart.putIfAbsent(phase, System.nanoTime()): Unit
-      try body
-      finally phaseEnd.merge(phase, System.nanoTime(),
-        (a, b) => if (a >= b) a else b): Unit
-    }
     try {
-      val staged: Map[String, Future[(String, Long)]] =
-        stagingTaskList.map { case (n, task) =>
-          n -> Future(mark("staging")(task()))
-        }.toMap
-      def after[T](deps: Seq[Future[_]])(body: => T): Future[T] =
-        Future.sequence(deps).flatMap(_ => Future(body))
-      val dims3nfF = after(Seq(staged("customers"), staged("suppliers"),
-        staged("products")))(mark("3nf")(dims3nfGroup()))
-      val fact3nfF = after(Seq(staged("sales"), staged("orders"), dims3nfF))(
-        mark("3nf")(Map("ce_sales" -> load3nfFact())))
-      val dmDimsF = after(Seq(dims3nfF))(mark("dm")(dmDimsGroup()))
-      val dmRestF = after(Seq(fact3nfF))(mark("dm")(dmFactAndDates()))
-      val roots: Seq[Future[Map[String, Long]]] =
-        Future.sequence(staged.values.toSeq).map(_.toMap) ::
-          List(dims3nfF, fact3nfF, dmDimsF, dmRestF)
-      // settle ALL before rethrowing (same discipline as inParallel):
-      // an immediate retry must never race a straggler loader's swap
-      val settled = Await.result(
-        Future.sequence(roots.map(_.transform(scala.util.Success(_)))),
-        Duration.Inf)
-      val counts = settled.flatMap(_.get).toMap
+      val counts = runNodes(nodes, probe)
       log.append("run_full_etl", f"pipeline completed in ${(System.nanoTime() - t0) / 1e9}%.2f s",
         counts.values.sum)
       counts
-    } finally {
-      // spans of whatever phases ran — on failure too (attribution)
-      phaseStart.forEach { (phase, s) =>
-        Option(phaseEnd.get(phase)).foreach(e =>
-          probe(phase, (e - s) / 1e9))
-      }
-      log.flush() // failure outside a logged{} block still lands buffered events
-    }
+    } finally log.flush() // failure outside a logged{} block still lands buffered events
   }
 
-  /** The 3NF + DM stages as the same dependency DAG (no staging) — the
+  /** The 3NF + DM nodes over the already-staged inputs — the
     * incremental path's unit of work (q74 runs it three times over a
-    * staged-inputs delta). Identical loads and counts to
-    * `stage3nf() ++ stageDm()`; only the false barriers between
-    * independent loaders are removed (DM dims overlap the 3NF fact).
+    * staged-inputs delta). Same scheduler and node bodies as
+    * [[runFullEtl]]; the staging deps count as published.
     */
-  def run3nfDm(): Map[String, Long] = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext = Orchestrator.loaderPool
-    val dims3nfF = Future(dims3nfGroup())
-    val fact3nfF = dims3nfF.flatMap(_ =>
-      Future(Map("ce_sales" -> load3nfFact())))
-    val dmDimsF = dims3nfF.flatMap(_ => Future(dmDimsGroup()))
-    val dmRestF = fact3nfF.flatMap(_ => Future(dmFactAndDates()))
-    val settled = Await.result(
-      Future.sequence(List(dims3nfF, fact3nfF, dmDimsF, dmRestF)
-        .map(_.transform(scala.util.Success(_)))), Duration.Inf)
-    settled.flatMap(_.get).toMap
-  }
+  def run3nfDm(): Map[String, Long] =
+    runNodes(nodes.filter(_.layer != "staging"), (_, _) => ())
 
-  /** Run independent loads of one stage concurrently — Spark schedules
-    * jobs from multiple driver threads onto the same executors, so
-    * single-digit-second write jobs overlap instead of queueing. The
-    * dependency ORDER between stages (and products→fact within stage 2)
-    * stays sequential.
+  /** The loader DAG, in dependency order: the reference's master
+    * procedure (run_full_etl_process.sql:36-104) with its parent-first
+    * ORDER kept and the false barriers between independent loaders
+    * dropped (guide §2.6: actions are only sequential because driver
+    * code calls them sequentially). Each node starts the moment the
+    * tables it READS are written: the five staging loads at once; the
+    * 3NF dims once customers/suppliers/products are staged; the 3NF
+    * fact on sales/orders staging + the dims; the DM dims on the 3NF
+    * dims alone; dim_dates + fct_sales on the 3NF fact alone.
     */
-  private[plans] def inParallel(tasks: Seq[() => (String, Long)]): Map[String, Long] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    import scala.util.Try
-    implicit val ec: ExecutionContext = Orchestrator.loaderPool
-    // Settle ALL loaders before rethrowing: Future.sequence alone fails
-    // fast on the first error while sibling loaders are still mid-
-    // directory-swap — an immediate retry would then start a second
-    // writer against a table whose first writer is still live, and the
-    // stragglers' log events would land after the caller's flush.
-    val settled = Await.result(
-      Future.sequence(tasks.map(t => Future(Try(t())))), Duration.Inf)
-    settled.map(_.get).toMap // first failure rethrows, after all settled
-  }
+  private def nodes: Seq[Node] = stagingNodes ++ Seq(
+    Node("3nf_dims", "3nf", Seq("staging_customers", "staging_suppliers", "staging_products"),
+      () => dims3nfGroup()),
+    Node("3nf_fact", "3nf", Seq("staging_sales", "staging_orders", "3nf_dims"),
+      () => Future(Map("ce_sales" -> load3nfFact()))),
+    Node("dm_dims", "dm", Seq("3nf_dims"), () => dmDimsGroup()),
+    Node("dm_fact_dates", "dm", Seq("3nf_fact"), () => dmFactAndDates()))
 
-  // -- Stage 1: staging — cast-to-string clean + distinct + anti-join append
-  //    (reference: sql/staging/load_staging_*_table.sql)
-  def stageStaging(): Map[String, Long] = inParallel(stagingTaskList.map(_._2))
-
-  /** The five staging loads, NAMED so [[runFullEtl]]'s DAG can key a
-    * downstream loader to exactly the staging tables it reads. */
-  private def stagingTaskList: Seq[(String, () => (String, Long))] = {
-    def load(name: String, src: DataFrame, cols: Seq[String], keys: Seq[String]): (String, Long) = {
-      val cleaned = Staging.clean(src, cols)
-      // additive schema evolution (pad-with-NULL, keep history) or full
-      // reload on a non-additive change — at 100 TB a one-column
-      // extract change must not trigger a full staging reload
-      // (reference: load_staging_sales_table.sql:52-73)
-      val merged =
-        if (!wh.exists("staging", name)) cleaned
-        else Staging.evolveAppend(cleaned, wh.read("staging", name), keys)
-      name -> log.logged(s"load_staging_$name")(wh.overwrite(merged, "staging", name))
+  /** The one scheduler. Composes each node after its deps with
+    * `flatMap`, so no loaderPool thread ever waits on another pool
+    * future; the single blocking wait is [[await]] on the caller's
+    * thread. Deps outside `run` count as already published. A node
+    * runs only if all its deps succeeded, and nothing rethrows until
+    * every started node has settled ([[settleAll]]).
+    */
+  private def runNodes(run: Seq[Node], probe: (String, Double) => Unit): Map[String, Long] = {
+    val layerStart = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]
+    val layerEnd = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]
+    val started = scala.collection.mutable.LinkedHashMap.empty[String, Future[Map[String, Long]]]
+    run.foreach { n =>
+      started(n.name) = Future.sequence(n.deps.flatMap(started.get)).flatMap { _ =>
+        layerStart.putIfAbsent(n.layer, System.nanoTime()): Unit
+        Future.delegate(n.body()).andThen { case _ =>
+          layerEnd.merge(n.layer, System.nanoTime(), (a, b) => if (a >= b) a else b)
+        }
+      }
     }
+    try await(settleAll(started.values.toSeq)).flatten.toMap
+    finally {
+      // spans of whatever layers ran — on failure too (attribution)
+      layerStart.forEach { (layer, s) =>
+        Option(layerEnd.get(layer)).foreach(e => probe(layer, (e - s) / 1e9))
+      }
+    }
+  }
+
+  /** Completes once EVERY future has settled, then fails with the
+    * first failure in `fs` order. Failing fast would rethrow while
+    * sibling loaders are still mid-directory-swap — an immediate retry
+    * would then start a second writer against a table whose first
+    * writer is still live, and the stragglers' log events would land
+    * after the caller's flush.
+    */
+  private def settleAll[T](fs: Seq[Future[T]]): Future[Seq[T]] =
+    Future.sequence(fs.map(_.transform(scala.util.Success(_)))).map(_.map(_.get))
+
+  /** Independent loads run concurrently — Spark schedules jobs from
+    * multiple driver threads onto the same executors, so
+    * single-digit-second write jobs overlap instead of queueing. */
+  private[plans] def inParallel(tasks: Seq[() => (String, Long)]): Future[Map[String, Long]] =
+    settleAll(tasks.map(t => Future(t()))).map(_.toMap)
+
+  /** The ETL's one blocking wait: callers' threads only, never a
+    * loaderPool thread (a pool thread waiting on pool futures can
+    * starve the fixed pool when orchestrations share it). */
+  private[plans] def await[T](f: Future[T]): T =
+    scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
+
+  // -- Staging — cast-to-string clean + distinct + anti-join append
+  //    (reference: sql/staging/load_staging_*_table.sql)
+  private def stagingNodes: Seq[Node] = {
+    def load(name: String, src: => DataFrame, cols: Seq[String], keys: Seq[String]): Node =
+      Node(s"staging_$name", "staging", Nil, () => Future {
+        val cleaned = Staging.clean(src, cols)
+        // additive schema evolution (pad-with-NULL, keep history) or full
+        // reload on a non-additive change — at 100 TB a one-column
+        // extract change must not trigger a full staging reload
+        // (reference: load_staging_sales_table.sql:52-73)
+        val merged =
+          if (!wh.exists("staging", name)) cleaned
+          else Staging.evolveAppend(cleaned, wh.read("staging", name), keys)
+        Map(name -> log.logged(s"load_staging_$name")(wh.overwrite(merged, "staging", name)))
+      })
     Seq(
-      "customers" -> (() => load("customers", Tables.customer(spark, sfDir),
-        Seq("c_custkey", "c_name", "c_nationkey", "c_mktsegment"), Seq("c_custkey"))),
-      "products" -> (() => load("products", Tables.part(spark, sfDir),
+      load("customers", Tables.customer(spark, sfDir),
+        Seq("c_custkey", "c_name", "c_nationkey", "c_mktsegment"), Seq("c_custkey")),
+      load("products", Tables.part(spark, sfDir),
         Seq("p_partkey", "p_name", "p_brand", "p_type", "p_size", "p_retailprice"),
-        Seq("p_partkey", "p_retailprice"))), // key+price: lets a price change re-enter (SURVEY §3.4.4)
-      "suppliers" -> (() => load("suppliers", Tables.supplier(spark, sfDir),
-        Seq("s_suppkey", "s_name", "s_acctbal", "s_nationkey"), Seq("s_suppkey"))),
-      "sales" -> (() => load("sales", Tables.lineitem(spark, sfDir),
+        Seq("p_partkey", "p_retailprice")), // key+price: lets a price change re-enter (SURVEY §3.4.4)
+      load("suppliers", Tables.supplier(spark, sfDir),
+        Seq("s_suppkey", "s_name", "s_acctbal", "s_nationkey"), Seq("s_suppkey")),
+      load("sales", Tables.lineitem(spark, sfDir),
         Seq("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey", "l_quantity",
           "l_extendedprice", "l_shipdate"),
-        Seq("l_orderkey", "l_linenumber"))),
-      "orders" -> (() => load("orders", Tables.orders(spark, sfDir),
-        Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_orderdate"), Seq("o_orderkey"))))
+        Seq("l_orderkey", "l_linenumber")),
+      load("orders", Tables.orders(spark, sfDir),
+        Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_orderdate"), Seq("o_orderkey")))
   }
 
   // ---- O(changed) loader-group skip --------------------------------
@@ -265,15 +251,13 @@ class Orchestrator(spark: SparkSession, sfDir: String, whRoot: String) {
       s"$sfDir/region.parquet", s"$sfDir/nation.parquet") ++
       dims3nf.map(wh.path("bl_3nf", _))
 
-  // -- Stage 2: 3NF — 4-level geo hierarchy + 2-level product tree
+  // -- 3NF — 4-level geo hierarchy + 2-level product tree
   //    (insert-only), SCD1 customers (split name, city link), SCD2
   //    products (subcategory link), supplier dim, incremental sales fact
-  def stage3nf(): Map[String, Long] =
-    dims3nfGroup() + ("ce_sales" -> load3nfFact())
 
-  /** The nine 3NF dimension loads as one skip-able group (everything in
-    * [[stage3nf]] except the fact). */
-  private def dims3nfGroup(): Map[String, Long] = {
+  /** The nine 3NF dimension loads as one skip-able group (every 3NF
+    * loader except the fact). */
+  private def dims3nfGroup(): Future[Map[String, Long]] = {
     val runDt = current_date()
     val runTs = date_trunc("second", current_timestamp())
 
@@ -282,10 +266,10 @@ class Orchestrator(spark: SparkSession, sfDir: String, whRoot: String) {
         log.append("load_3nf_dims",
           "skipped: staging/source inputs and dim outputs unchanged since last load",
           counts.values.sum)
-        counts
+        Future.successful(counts)
       case None =>
         // Staging tables consumed by MORE THAN ONE loader below are read
-        // once and persisted for the duration of the stage — customers
+        // once and persisted for the duration of the group — customers
         // feed both the geo derivation and the SCD1 source, suppliers both
         // geo and the supplier dim, products three product-tree relations.
         // Without the persist each parallel loader re-runs the same parquet
@@ -295,20 +279,18 @@ class Orchestrator(spark: SparkSession, sfDir: String, whRoot: String) {
         val custStaged = wh.read("staging", "customers").persist()
         val supStaged = wh.read("staging", "suppliers").persist()
         val prodStaged = wh.read("staging", "products").persist()
-        val counts =
-          try stage3nfDims(runDt, runTs, custStaged, supStaged, prodStaged)
-          finally {
-            custStaged.unpersist(); supStaged.unpersist(); prodStaged.unpersist(); ()
+        Future.delegate(stage3nfDims(runDt, runTs, custStaged, supStaged, prodStaged))
+          .andThen { case _ =>
+            custStaged.unpersist(); supStaged.unpersist(); prodStaged.unpersist()
           }
-        recordGroup("3nf_dims", dims3nfDirs, counts)
-        counts
+          .map { counts => recordGroup("3nf_dims", dims3nfDirs, counts); counts }
     }
   }
 
   private def stage3nfDims(runDt: org.apache.spark.sql.Column,
                            runTs: org.apache.spark.sql.Column,
                            custStaged: DataFrame, supStaged: DataFrame,
-                           prodStaged: DataFrame): Map[String, Long] = {
+                           prodStaged: DataFrame): Future[Map[String, Long]] = {
     // Hierarchy SOURCE relations (SURVEY §2.3 J3/J4 at reference depth):
     // all are deterministic functions of the staged data — geo ids are
     // stable arithmetic (Hierarchy), tree ids are max-offset
@@ -339,127 +321,116 @@ class Orchestrator(spark: SparkSession, sfDir: String, whRoot: String) {
     // critical path. New names get ids past the existing max — the
     // reference's NEXTVAL (F19, reference:
     // sql/3nf/load_3nf_ce_categories_table.sql).
-    val (statesSrc, citiesSrc, catsLocal, subsLocal) = {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: scala.concurrent.ExecutionContext = Orchestrator.loaderPool
-      val geoF = Future {
-        val st = localize(withDefaultRow(
-          Hierarchy.states(custGeo, supGeo, realCountries),
-          Seq(lit(-1L), lit("n.a."), lit(-1L))))
-        val ci = localize(withDefaultRow(
-          Hierarchy.cities(custGeo, realCountries, st),
-          Seq(lit(-1L), lit("n.a."), lit(-1L))))
-        (st, ci)
-      }
-      val prodF = Future {
-        val cats = localize(resumeSurrogates(
-          prodStaged.select(Hierarchy.categoryOf(col("p_type")).as("category_name")).distinct(),
-          "bl_3nf", "ce_categories", "category_name", "category_id"))
-        val subsSrc = prodStaged.select(
-            Hierarchy.subcategoryOf(col("p_type"), col("p_brand")).as("subcategory_name"),
-            Hierarchy.categoryOf(col("p_type")).as("category_ref")).distinct()
-          .join(broadcast(cats), upper(col("category_ref")) === upper(col("category_name")), "left")
-          .select(col("subcategory_name"),
-            coalesce(col("category_id"), lit(-1L)).as("subcategory_category_id"))
-        val subs = localize(resumeSurrogates(subsSrc, "bl_3nf", "ce_subcategories",
-          "subcategory_name", "subcategory_id"))
-        (cats, subs)
-      }
-      // settle both before rethrowing (the inParallel discipline)
-      val geoT = scala.util.Try(Await.result(geoF, Duration.Inf))
-      val prodT = scala.util.Try(Await.result(prodF, Duration.Inf))
-      val (st, ci) = geoT.get
-      val (cats, subs) = prodT.get
-      (st, ci, cats, subs)
+    val geoF = Future {
+      val st = localize(withDefaultRow(
+        Hierarchy.states(custGeo, supGeo, realCountries),
+        Seq(lit(-1L), lit("n.a."), lit(-1L))))
+      val ci = localize(withDefaultRow(
+        Hierarchy.cities(custGeo, realCountries, st),
+        Seq(lit(-1L), lit("n.a."), lit(-1L))))
+      (st, ci)
     }
-
-    // Geo levels + SCD1 customers + SCD2 products + suppliers are
-    // independent of each other — loaded concurrently; the fact load
-    // below waits on them.
-    val dims = inParallel(Seq(
-      () => "ce_categories" -> log.logged("load_3nf_ce_categories")(
-        wh.overwrite(catsLocal, "bl_3nf", "ce_categories")),
-      () => "ce_subcategories" -> log.logged("load_3nf_ce_subcategories")(
-        wh.overwrite(subsLocal, "bl_3nf", "ce_subcategories")),
-      () => "ce_continents" -> log.logged("load_3nf_ce_continents")(
-        wh.overwrite(insertOnly(continentsSrc, "bl_3nf", "ce_continents", Seq("continent_id")),
-          "bl_3nf", "ce_continents")),
-      () => "ce_countries" -> log.logged("load_3nf_ce_countries")(
-        wh.overwrite(insertOnly(countriesSrc, "bl_3nf", "ce_countries", Seq("country_id")),
-          "bl_3nf", "ce_countries")),
-      // states from customers ∪ suppliers (reference:
-      // sql/3nf/load_3nf_ce_states_table.sql:31-49); cities resolve
-      // their parent state by case-insensitive name (J1, reference:
-      // sql/3nf/load_3nf_ce_cities_table.sql:31-32)
-      () => "ce_states" -> log.logged("load_3nf_ce_states")(
-        wh.overwrite(insertOnly(statesSrc, "bl_3nf", "ce_states", Seq("state_id")),
-          "bl_3nf", "ce_states")),
-      () => "ce_cities" -> log.logged("load_3nf_ce_cities")(
-        wh.overwrite(insertOnly(citiesSrc, "bl_3nf", "ce_cities", Seq("city_id")),
-          "bl_3nf", "ce_cities")),
-      () => {
-        // Customers: SCD Type 1 on (first_name, last_name, segment) —
-        // the split-then-track composition the reference runs
-        // (load_3nf_ce_customers_scd_table_type1.sql:24-25,128-138);
-        // city link rides along untracked.
-        val custSrc = Hierarchy.customersSource(custStaged, realCountries, citiesSrc)
-        // a target written by an older schema (e.g. pre-name-split) has
-        // no history the new tracked columns can continue — rebuild
-        val targetOk = wh.exists("bl_3nf", "ce_customers") && {
-          val cols = wh.read("bl_3nf", "ce_customers").columns.toSet
-          custSrc.columns.forall(cols.contains)
-        }
-        val custTarget =
-          if (targetOk) wh.read("bl_3nf", "ce_customers").drop("scd_status")
-          else custSrc.limit(0)
-            .withColumn("insert_dt", runDt).withColumn("update_dt", runDt)
-        "ce_customers" -> log.logged("load_3nf_ce_customers_scd1")(
-          wh.overwrite(
-            Scd.scd1Merge(custTarget, custSrc, Seq("customer_id"),
-              Seq("first_name", "last_name", "segment"), runDt),
-            "bl_3nf", "ce_customers"))
-      },
-      () => {
-        // Suppliers — the reference's stores: state-level geo link +
-        // numeric attribute, insert-only
-        // (reference: sql/3nf/load_3nf_ce_stores_table.sql:17-33)
-        val supSrc = withDefaultRow(
-          Hierarchy.suppliersSource(supStaged, realCountries, statesSrc),
-          Seq(lit(-1L), lit("n.a."), lit(null), lit(null), lit(-1L)))
-        "ce_suppliers" -> log.logged("load_3nf_ce_suppliers")(
-          wh.overwrite(insertOnly(supSrc, "bl_3nf", "ce_suppliers", Seq("supplier_id")),
-            "bl_3nf", "ce_suppliers"))
-      },
-      () => {
-        // Products: SCD Type 2 on retail price; subcategory resolved by
-        // case-insensitive name (J1) into an untracked attribute
-        val subs = subsLocal
-        val prodSrc = prodStaged
-          .withColumn("sub_ref", Hierarchy.subcategoryOf(col("p_type"), col("p_brand")))
-          .join(broadcast(subs.select(col("subcategory_id"), col("subcategory_name"))),
-            upper(col("sub_ref")) === upper(col("subcategory_name")), "left")
-          .select(
-            col("p_partkey").cast(LongType).as("product_id"),
-            col("p_name").as("product_name"),
-            col("p_brand").as("brand"),
-            col("p_type").as("product_type"),
-            coalesce(col("subcategory_id"), lit(-1L)).as("product_subcategory_id"),
-            col("p_retailprice").cast(DecimalType(9, 2)).as("unit_price"))
-          // staging dedups on (key, price); one current row per key enters SCD2
-          .transform(df => Staging.dedupFirstWins(df, Seq("product_id"), Seq(col("unit_price").desc)))
-        val prodTarget =
-          if (wh.exists("bl_3nf", "ce_products_scd")) wh.read("bl_3nf", "ce_products_scd")
-          else prodSrc.limit(0)
-            .withColumn("start_ts", runTs.cast(TimestampType))
-            .withColumn("end_ts", runTs.cast(TimestampType))
-            .withColumn("is_active", lit("Y"))
-        "ce_products_scd" -> log.logged("load_3nf_ce_products_scd2")(
-          wh.overwrite(
-            Scd.scd2Merge(prodTarget, prodSrc, Seq("product_id"), Seq("unit_price"), runTs),
-            "bl_3nf", "ce_products_scd"))
-      }))
-    dims
+    val prodF = Future {
+      val cats = localize(resumeSurrogates(
+        prodStaged.select(Hierarchy.categoryOf(col("p_type")).as("category_name")).distinct(),
+        "bl_3nf", "ce_categories", "category_name", "category_id"))
+      val subsSrc = prodStaged.select(
+          Hierarchy.subcategoryOf(col("p_type"), col("p_brand")).as("subcategory_name"),
+          Hierarchy.categoryOf(col("p_type")).as("category_ref")).distinct()
+        .join(broadcast(cats), upper(col("category_ref")) === upper(col("category_name")), "left")
+        .select(col("subcategory_name"),
+          coalesce(col("category_id"), lit(-1L)).as("subcategory_category_id"))
+      val subs = localize(resumeSurrogates(subsSrc, "bl_3nf", "ce_subcategories",
+        "subcategory_name", "subcategory_id"))
+      (cats, subs)
+    }
+    settleAll(Seq(geoF, prodF)).flatMap { case Seq((statesSrc, citiesSrc), (catsLocal, subsLocal)) =>
+      // Geo levels + SCD1 customers + SCD2 products + suppliers are
+      // independent of each other — loaded concurrently; the fact load
+      // below waits on them.
+      inParallel(Seq(
+        () => "ce_categories" -> log.logged("load_3nf_ce_categories")(
+          wh.overwrite(catsLocal, "bl_3nf", "ce_categories")),
+        () => "ce_subcategories" -> log.logged("load_3nf_ce_subcategories")(
+          wh.overwrite(subsLocal, "bl_3nf", "ce_subcategories")),
+        () => "ce_continents" -> log.logged("load_3nf_ce_continents")(
+          wh.overwrite(insertOnly(continentsSrc, "bl_3nf", "ce_continents", Seq("continent_id")),
+            "bl_3nf", "ce_continents")),
+        () => "ce_countries" -> log.logged("load_3nf_ce_countries")(
+          wh.overwrite(insertOnly(countriesSrc, "bl_3nf", "ce_countries", Seq("country_id")),
+            "bl_3nf", "ce_countries")),
+        // states from customers ∪ suppliers (reference:
+        // sql/3nf/load_3nf_ce_states_table.sql:31-49); cities resolve
+        // their parent state by case-insensitive name (J1, reference:
+        // sql/3nf/load_3nf_ce_cities_table.sql:31-32)
+        () => "ce_states" -> log.logged("load_3nf_ce_states")(
+          wh.overwrite(insertOnly(statesSrc, "bl_3nf", "ce_states", Seq("state_id")),
+            "bl_3nf", "ce_states")),
+        () => "ce_cities" -> log.logged("load_3nf_ce_cities")(
+          wh.overwrite(insertOnly(citiesSrc, "bl_3nf", "ce_cities", Seq("city_id")),
+            "bl_3nf", "ce_cities")),
+        () => {
+          // Customers: SCD Type 1 on (first_name, last_name, segment) —
+          // the split-then-track composition the reference runs
+          // (load_3nf_ce_customers_scd_table_type1.sql:24-25,128-138);
+          // city link rides along untracked.
+          val custSrc = Hierarchy.customersSource(custStaged, realCountries, citiesSrc)
+          // a target written by an older schema (e.g. pre-name-split) has
+          // no history the new tracked columns can continue — rebuild
+          val targetOk = wh.exists("bl_3nf", "ce_customers") && {
+            val cols = wh.read("bl_3nf", "ce_customers").columns.toSet
+            custSrc.columns.forall(cols.contains)
+          }
+          val custTarget =
+            if (targetOk) wh.read("bl_3nf", "ce_customers").drop("scd_status")
+            else custSrc.limit(0)
+              .withColumn("insert_dt", runDt).withColumn("update_dt", runDt)
+          "ce_customers" -> log.logged("load_3nf_ce_customers_scd1")(
+            wh.overwrite(
+              Scd.scd1Merge(custTarget, custSrc, Seq("customer_id"),
+                Seq("first_name", "last_name", "segment"), runDt),
+              "bl_3nf", "ce_customers"))
+        },
+        () => {
+          // Suppliers — the reference's stores: state-level geo link +
+          // numeric attribute, insert-only
+          // (reference: sql/3nf/load_3nf_ce_stores_table.sql:17-33)
+          val supSrc = withDefaultRow(
+            Hierarchy.suppliersSource(supStaged, realCountries, statesSrc),
+            Seq(lit(-1L), lit("n.a."), lit(null), lit(null), lit(-1L)))
+          "ce_suppliers" -> log.logged("load_3nf_ce_suppliers")(
+            wh.overwrite(insertOnly(supSrc, "bl_3nf", "ce_suppliers", Seq("supplier_id")),
+              "bl_3nf", "ce_suppliers"))
+        },
+        () => {
+          // Products: SCD Type 2 on retail price; subcategory resolved by
+          // case-insensitive name (J1) into an untracked attribute
+          val subs = subsLocal
+          val prodSrc = prodStaged
+            .withColumn("sub_ref", Hierarchy.subcategoryOf(col("p_type"), col("p_brand")))
+            .join(broadcast(subs.select(col("subcategory_id"), col("subcategory_name"))),
+              upper(col("sub_ref")) === upper(col("subcategory_name")), "left")
+            .select(
+              col("p_partkey").cast(LongType).as("product_id"),
+              col("p_name").as("product_name"),
+              col("p_brand").as("brand"),
+              col("p_type").as("product_type"),
+              coalesce(col("subcategory_id"), lit(-1L)).as("product_subcategory_id"),
+              col("p_retailprice").cast(DecimalType(9, 2)).as("unit_price"))
+            // staging dedups on (key, price); one current row per key enters SCD2
+            .transform(df => Staging.dedupFirstWins(df, Seq("product_id"), Seq(col("unit_price").desc)))
+          val prodTarget =
+            if (wh.exists("bl_3nf", "ce_products_scd")) wh.read("bl_3nf", "ce_products_scd")
+            else prodSrc.limit(0)
+              .withColumn("start_ts", runTs.cast(TimestampType))
+              .withColumn("end_ts", runTs.cast(TimestampType))
+              .withColumn("is_active", lit("Y"))
+          "ce_products_scd" -> log.logged("load_3nf_ce_products_scd2")(
+            wh.overwrite(
+              Scd.scd2Merge(prodTarget, prodSrc, Seq("product_id"), Seq("unit_price"), runTs),
+              "bl_3nf", "ce_products_scd"))
+        }))
+    }
   }
 
   /** The 3NF fact load — always runs (its watermark probe + empty-slice
@@ -706,7 +677,7 @@ class Orchestrator(spark: SparkSession, sfDir: String, whRoot: String) {
     } else
       Relational.surrogateKeys(src, nameCol, 0L, idCol)
 
-  // -- Stage 3: dimensional — date dim, snowflake-flattened dims,
+  // -- Dimensional — date dim, snowflake-flattened dims,
   //    DM-layer SCD2 re-versioning, partition-wise incremental fact
   /** The DM dim group's dependency set: the seven 3NF relations the
     * three flatten/re-version loaders read, plus their outputs. The
@@ -723,23 +694,8 @@ class Orchestrator(spark: SparkSession, sfDir: String, whRoot: String) {
   private def dimDatesDirs: Seq[String] =
     Seq(wh.path("bl_3nf", "ce_sales"), wh.path("bl_dm", "dim_dates"))
 
-  def stageDm(): Map[String, Long] = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext = Orchestrator.loaderPool
-    // the two halves read disjoint stage-2 outputs (dims: the 3NF dims;
-    // dates/fact: ce_sales) — same concurrency as the old single
-    // inParallel batch, split so runFullEtl's DAG can start each half
-    // the moment ITS inputs are written
-    val dimsF = Future(scala.util.Try(dmDimsGroup()))
-    val restF = Future(scala.util.Try(dmFactAndDates()))
-    val dims = Await.result(dimsF, Duration.Inf)
-    val rest = Await.result(restF, Duration.Inf)
-    dims.get ++ rest.get
-  }
-
   /** The three DM dimension loads as one skip-able group. */
-  private def dmDimsGroup(): Map[String, Long] = {
+  private def dmDimsGroup(): Future[Map[String, Long]] = {
     val runTs = date_trunc("second", current_timestamp())
     val dmDimsSkip = groupUnchanged("dm_dims", dimsDmDirs)
     val dimTasks: Seq[() => (String, Long)] = if (dmDimsSkip.isDefined) Seq.empty else Seq(
@@ -793,18 +749,16 @@ class Orchestrator(spark: SparkSession, sfDir: String, whRoot: String) {
         log.append("load_dm_dims",
           "skipped: 3NF inputs and DM dim outputs unchanged since last load",
           counts.values.sum)
-        counts
+        Future.successful(counts)
       case None =>
-        val counts = inParallel(dimTasks)
-        recordGroup("dm_dims", dimsDmDirs, counts)
-        counts
+        inParallel(dimTasks).map { counts => recordGroup("dm_dims", dimsDmDirs, counts); counts }
     }
   }
 
   /** The DM loads that read ce_sales: the date dimension (its own skip
     * group — it depends on the FACT's date range, not the dims) and the
     * month-partitioned incremental fact sync, run concurrently. */
-  private def dmFactAndDates(): Map[String, Long] = {
+  private def dmFactAndDates(): Future[Map[String, Long]] = {
     val fact3nf = wh.readPartitioned("bl_3nf", "ce_sales", "order_month")
     val datesSkip = groupUnchanged("dim_dates", dimDatesDirs)
     val datesTask: Seq[() => (String, Long)] = if (datesSkip.isDefined) Seq.empty else Seq(
@@ -812,21 +766,22 @@ class Orchestrator(spark: SparkSession, sfDir: String, whRoot: String) {
         wh.overwrite(DimDates.autoRanged(spark, fact3nf, "order_dt"), "bl_dm", "dim_dates")))
     // Fact: month-partitioned (reference's RANGE partitions →
     // partitionBy); incremental runs rebuild only post-watermark months
-    val ran = inParallel(datesTask :+ (
+    inParallel(datesTask :+ (
       () => "fct_sales" -> log.logged("load_fct_sales")(
-        syncFactMonths(fact3nf, "bl_dm", "fct_sales"))): Seq[() => (String, Long)])
-    val dates = datesSkip match {
-      case Some(counts) =>
-        log.append("load_dim_dates",
-          "skipped: fact date range and dim_dates output unchanged since last load",
-          counts.values.sum)
-        counts
-      case None =>
-        val counts = ran.filter { case (t, _) => t == "dim_dates" }
-        recordGroup("dim_dates", dimDatesDirs, counts)
-        counts
+        syncFactMonths(fact3nf, "bl_dm", "fct_sales"))): Seq[() => (String, Long)]).map { ran =>
+      val dates = datesSkip match {
+        case Some(counts) =>
+          log.append("load_dim_dates",
+            "skipped: fact date range and dim_dates output unchanged since last load",
+            counts.values.sum)
+          counts
+        case None =>
+          val counts = ran.filter { case (t, _) => t == "dim_dates" }
+          recordGroup("dim_dates", dimDatesDirs, counts)
+          counts
+      }
+      dates + ("fct_sales" -> ran("fct_sales"))
     }
-    dates + ("fct_sales" -> ran("fct_sales"))
   }
 
   /** C3 insert-only append against the existing warehouse table, with
@@ -849,6 +804,11 @@ class Orchestrator(spark: SparkSession, sfDir: String, whRoot: String) {
 }
 
 object Orchestrator {
+  /** One loader-DAG node: `body` starts the node's loads once every
+    * dep has succeeded and completes with the row counts they return. */
+  private final case class Node(name: String, layer: String, deps: Seq[String],
+                                body: () => Future[Map[String, Long]])
+
   /** Shared pool for concurrent loader jobs (bounded — loaders are
     * driver-side coordinators; the real work runs on Spark's executors).
     */
@@ -919,9 +879,9 @@ object EtlQueries extends graft.QueryPack {
       val liSub = Tables.lineitem(s, d).filter(col("l_orderkey") % 5 === 0)
       val oSub = Tables.orders(s, d).filter(col("o_orderkey") % 5 === 0)
       pass("stage_inputs") {
-        // five independent table writes — overlapped like stageStaging's
-        // (guide §2.6), not serialized on the driver
-        orch.inParallel(Seq(
+        // five independent table writes — overlapped like the staging
+        // nodes' (guide §2.6), not serialized on the driver
+        orch.await(orch.inParallel(Seq(
           () => stage("customers", Tables.customer(s, d),
             Seq("c_custkey", "c_name", "c_nationkey", "c_mktsegment")),
           () => stage("products", Tables.part(s, d),
@@ -929,7 +889,7 @@ object EtlQueries extends graft.QueryPack {
           () => stage("suppliers", Tables.supplier(s, d),
             Seq("s_suppkey", "s_name", "s_acctbal", "s_nationkey")),
           () => stage("orders", oSub, oCols),
-          () => stage("sales", liSub, lCols))): Unit
+          () => stage("sales", liSub, lCols)))): Unit
       }
       pass("pass1_initial") { orch.run3nfDm() }
       // the late extract: last month's orders + their lines, +60 days,
@@ -950,11 +910,11 @@ object EtlQueries extends graft.QueryPack {
             col("l_quantity"), col("l_extendedprice"),
             date_add(to_date(col("l_shipdate")), 60).as("l_shipdate"))
         // two independent staging-table appends — overlapped
-        orch.inParallel(Seq(
+        orch.await(orch.inParallel(Seq(
           () => "orders" -> wh.overwrite(Staging.antiJoinAppend(Staging.clean(lateO, oCols),
             wh.read("staging", "orders"), Seq("o_orderkey")), "staging", "orders"),
           () => "sales" -> wh.overwrite(Staging.antiJoinAppend(Staging.clean(lateL, lCols),
-            wh.read("staging", "sales"), Seq("l_orderkey", "l_linenumber")), "staging", "sales"))): Unit
+            wh.read("staging", "sales"), Seq("l_orderkey", "l_linenumber")), "staging", "sales")))): Unit
       }
       pass("pass2_incremental") { orch.run3nfDm() }
       // Third pass: the reference's idempotency re-run on UNCHANGED
@@ -965,7 +925,8 @@ object EtlQueries extends graft.QueryPack {
       // tables: if a no-op run ever rewrites a fact partition, the
       // requires below fail the gate loudly. Duration goes to stderr;
       // OrchestratorSpec asserts the same invariants per-table at
-      // sf0.001 and EtlTiming prints the sf0.1 full-vs-noop numbers.
+      // sf0.001, and perfbench's etl_cycle workload times the full load
+      // against the no-op re-run.
       def factSig(layer: String, table: String): Set[(String, Long, Long)] = {
         def walk(f: java.io.File): Seq[java.io.File] =
           if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)

@@ -142,4 +142,21 @@ class BpePropertySpec extends SparkSpec {
       } finally spark.conf.unset("graft.bpe.driverCorpusLimit")
     }
   }
+
+  test("a driver-path needState training retires the state a distributed one kept") {
+    val docs = Seq("a b a b c", "b c a b c", "a b c a b", "c a c a b b", "b b c a")
+      .zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    val sc = spark.sparkContext
+    def persisted = sc.getPersistentRDDs.keySet.toSet
+    val before = persisted
+    spark.conf.set("graft.bpe.driverCorpusLimit", "0")
+    val kept =
+      try {
+        TextQueries.bpeTrain(docs, "text", "doc_id", 4).count()
+        persisted -- before
+      } finally spark.conf.unset("graft.bpe.driverCorpusLimit")
+    assert(kept.nonEmpty, "the distributed needState training keeps its final state")
+    TextQueries.bpeTrain(docs, "text", "doc_id", 4).count()
+    assert((kept & persisted).isEmpty)
+  }
 }
